@@ -1,22 +1,65 @@
-"""Connected components over near-duplicate pairs — turns pairwise
-near-dup evidence into dedup GROUPS (every transitive cluster keeps one
-representative), the step after minhash/jaccard in a real corpus dedup.
+"""Connected components — the one CC operator. It turns pairwise
+evidence (near-dup pairs, neighbor pairs, graph edges) into groups:
+every node is labeled with the minimum node id it can reach. Consumers:
+dedup_groups below (dedup_groups, corpus_curation_pipeline,
+link_entity_resolution), geo_dbscan_core (plans/warehouseq.py),
+graph_connected_components (plans/wave9c.py), dedup_cluster_canonical
+(plans/wave9d.py) and dedup_semantic_embedding (plans/wave11b.py).
 
-Iterative min-label propagation as pure DataFrame joins:
-  label(v) ← min(label(v), min over neighbors u of label(u))
-followed by one pointer-jumping shortcut per iteration
-  label(v) ← label(label(v))
-until fixpoint. Each iteration is one join + aggregate + one shortcut
-join (shuffles on the vertex id); lineage is cut with localCheckpoint
-every iteration so the plan doesn't grow exponentially. The shortcut
-halves the remaining chain depth each pass, so iterations needed are
-O(log diameter), not O(diameter) — a 10-iteration budget covers chains
-of length ~2^10. Hitting max_iter without a fixpoint raises instead of
-silently returning partial labels.
+Size gate: when the raw edge list has at most ``driver_edge_cutoff``
+rows (1M pairs ≈ 16 MB of longs, trivially driver-resident), ONE
+bounded ``limit(cutoff+1).collect()`` job feeds a driver union-find,
+and the distributed loop's per-round fixed cost (a take(1) convergence
+probe, a contraction join chain, plus a checkpoint + take(1) per
+pointer-doubling jump — a dozen serial blocking jobs even for a
+duplicate-clique graph) never runs. Union-find is insensitive to
+duplicate, self-loop and asymmetric edges, so the raw pairs ARE its
+input: the small regime runs no symmetrize or distinct shuffle. Gating
+on raw pairs is conservative — a heavily duplicated list can exceed the
+cutoff while its distinct edge set would fit — which only sends
+borderline inputs to the distributed path. Above the cutoff, the
+regime a 100 TB corpus's candidate pairs land in, the probe
+short-circuits at cutoff+1 rows and the loop below runs. Both paths
+return the same (v, component) rows with the same types.
+``driver_edge_cutoff=0`` forces the distributed path (tests).
 
-At 100 TB this is the standard large-star/small-star regime; near-dup
-components are shallow (chains are rare, cliques common), so the typical
-run converges in 2-3 iterations."""
+Distributed path: star contraction + pointer doubling. Plain hash-min
+label propagation needs DIAMETER rounds (13 on the sf0.1 event graph —
+the classic CC scale trap). This loop instead contracts the edge frame
+by the current labels every round and runs min-label over the
+CONTRACTED graph, the star-contraction scheme of the Shiloach-Vishkin /
+"Connected Components in MapReduce" family — and SHORTCUTS the
+per-round relabel map to its fixpoint by pointer doubling before
+applying it. Without the shortcut a min step on a path graph moves
+every label by exactly one hop, so convergence is linear in the chain
+length (a 200-node path needs 199 rounds), and duplicate chains
+A~B~C~... are exactly the motif dedup clustering exists for. The
+relabel map (rep -> newlabel) strictly DECREASES along pointers, so it
+is an acyclic forest, and map := map(map) collapses a length-L chain in
+ceil(log2 L) self-compositions. Every relabel join runs at
+REPRESENTATIVE scale (one row per live label, shrinking every round),
+never edge scale.
+
+Convergence is detected, not assumed: the outer loop stops when the
+contracted edge set is empty and the inner loop when no pointer moved
+(one-row take(1) each). Both 64-step caps are backed by geometric
+decay (doubling covers 2^64-length chains in 64 jumps; a fully
+shortcut min round at least halves the live-component-graph diameter),
+and both raise RuntimeError instead of returning partial labels
+(tests/test_components.py pins a 5,000-node shuffled path above the
+gate). lab/carcs/map localCheckpoint per round — the iterative-plan
+lineage discipline shared with graph_hits (plans/wave8c.py).
+
+Every checkpoint here is wrapped in util.strip_plan_stats: checkpoints
+carry the origin plan's Catalyst sizeInBytes into the new LogicalRDD,
+and the doubling SELF-join then squares that statistic every iteration
+— the BigInteger's bit length doubles per jump and Catalyst planning
+itself becomes the bottleneck (minutes of driver CPU inside
+BigInteger.multiplyToomCook3, found by jstack when a 600k-node chain
+probe's rounds grew 2 s -> 84 s on constant-size frames). Stripping
+the carried stats pins the estimate at defaultSizeInBytes; AQE still
+re-plans every join from true runtime sizes, so execution strategy is
+unchanged."""
 
 from __future__ import annotations
 
@@ -28,135 +71,113 @@ from pyspark.sql import types as T
 
 from etl_caic_spark.util import strip_plan_stats
 
+MAX_ROUNDS = 64
+MAX_JUMPS = 64
+
 
 def connected_components(
-    pairs: DataFrame,
-    left_col: str = "doc_a",
-    right_col: str = "doc_b",
-    max_iter: int = 10,
-    driver_edge_cutoff: int = 1_000_000,
+    edges: DataFrame, driver_edge_cutoff: int = 1_000_000
 ) -> DataFrame:
-    """pairs(left, right) → (member, component) where component is the
-    minimum vertex id in the connected component.
-
-    Size-gated hybrid: when the RAW pair list has at most
-    ``driver_edge_cutoff`` rows (default 1M pairs ≈ 16 MB of longs,
-    trivially driver-resident), a single-pass union-find on the driver
-    replaces the O(log diameter) join rounds, whose per-iteration fixed
-    cost (2 joins + agg + checkpoint + convergence count) dominates for
-    the small edge sets that near-dup thresholds typically produce. The
-    gate and the small-regime fetch are ONE job over the pairs plan
-    ALONE: ``pairs.limit(cutoff+1).collect()`` — union-find is
-    insensitive to duplicate/asymmetric edges, so the raw pairs ARE the
-    input and the small regime never runs the symmetrize-union +
-    distinct shuffle at all (r12: sequential blocking jobs made
-    corpus_curation_pipeline the most host-steal-sensitive query in the
-    fleet; r13 ADVICE: probing the unioned-distinct plan made large
-    graphs pay the distinct twice). Gating on raw pairs is conservative
-    — a heavily duplicated pair list can exceed the cutoff while its
-    distinct edge set would fit — which only sends borderline inputs to
-    the distributed path. Above the cutoff — the regime a 100 TB corpus
-    with billions of candidate pairs lands in — the probe
-    short-circuits at cutoff+1 raw rows (no shuffle executed; the pairs
-    plan's scanned partitions are re-evaluated once more by the
-    checkpoint below), the symmetrized-distinct edge set is built and
-    checkpointed exactly once, and the distributed min-label +
-    pointer-jumping loop below runs unchanged. ``driver_edge_cutoff=0``
-    forces the distributed path (used by tests to pin its semantics)."""
-    edges_plan = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(right_col).alias("src"), F.col(left_col).alias("dst"))
-        )
-        .distinct()
+    """edges(a, b) undirected -> (v, component) for every endpoint,
+    where component is the MINIMUM node id reachable from v (the
+    canonical representative). Size-gated (module docstring)."""
+    verts = edges.select(F.col("a").alias("v")).unionAll(
+        edges.select(F.col("b").alias("v"))
     )
     if driver_edge_cutoff > 0:
-        probe = (
-            pairs.select(
-                F.col(left_col).alias("src"), F.col(right_col).alias("dst")
-            )
-            .limit(driver_edge_cutoff + 1)
-            .collect()
-        )
+        probe = edges.select("a", "b").limit(driver_edge_cutoff + 1).collect()
         if len(probe) <= driver_edge_cutoff:
-            # vtype from the POST-UNION schema: if left/right differ in
-            # width (int vs bigint) the union widens, and the driver
-            # path must declare the same type the distributed path
-            # would produce (r13 ADVICE).
+            # vtype from the POST-UNION schema: if a/b differ in width
+            # (int vs bigint) the union widens, and the driver path must
+            # declare the type the distributed path produces.
             return _driver_union_find(
-                probe, pairs.sparkSession, edges_plan.schema["src"].dataType
+                probe, edges.sparkSession, verts.schema["v"].dataType
             )
-    edges = edges_plan.localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("component", F.col("v"))
+    lab = _ckpt(verts.distinct().select("v", F.col("v").alias("label")))
+    carcs = _ckpt(edges.select(F.col("a").alias("s"), F.col("b").alias("d")))
+    for _ in range(MAX_ROUNDS):
+        if not carcs.take(1):  # fixpoint: no edges between distinct labels
+            return lab.select("v", F.col("label").alias("component"))
+        sym = carcs.unionAll(
+            carcs.select(F.col("d").alias("s"), F.col("s").alias("d"))
+        )
+        nbmin = sym.groupBy(F.col("s").alias("rep")).agg(F.min("d").alias("mn"))
+        reps = lab.select(F.col("label").alias("rep")).distinct()
+        replab = reps.join(nbmin, "rep", "left").select(
+            "rep",
+            F.least(F.col("rep"), F.coalesce(F.col("mn"), F.col("rep"))).alias(
+                "newlabel"
+            ),
+        )
+        replab = _shortcut(replab)
+        lab = (
+            lab.join(replab, lab.label == replab.rep)
+            .select("v", F.col("newlabel").alias("label"))
+        )
+        lab = _ckpt(lab)
+        ra = replab.select(F.col("rep").alias("s"), F.col("newlabel").alias("ns"))
+        rb = replab.select(F.col("rep").alias("d"), F.col("newlabel").alias("nd"))
+        carcs = (
+            carcs.join(ra, "s")
+            .join(rb, "d")
+            .filter(F.col("ns") != F.col("nd"))
+            .select(F.col("ns").alias("s"), F.col("nd").alias("d"))
+            .distinct()
+        )
+        carcs = _ckpt(carcs)
+    raise RuntimeError(
+        f"connected_components: contracted edge frame still non-empty "
+        f"after {MAX_ROUNDS} rounds — returning partial labels is never "
+        f"an option"
     )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["v"])
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
+
+
+def _ckpt(df: DataFrame) -> DataFrame:
+    """localCheckpoint + carried-stats strip (module docstring)."""
+    return strip_plan_stats(df.localCheckpoint())
+
+
+def _shortcut(replab: DataFrame) -> DataFrame:
+    """Pointer-double ``rep -> newlabel`` to its fixpoint: afterwards
+    every rep points at the root of its pointer tree (newlabel values
+    are all self-mapped). Pointers strictly decrease, so the map is an
+    acyclic forest and map := map(map) converges in ceil(log2 L)
+    iterations for the longest chain L."""
+    for _ in range(MAX_JUMPS):
+        m2 = replab.select(
+            F.col("rep").alias("r2"), F.col("newlabel").alias("nl2")
         )
-        # Carry the pre-update label through the projection so convergence
-        # is a filter on the already-checkpointed result — no extra
-        # old-vs-new join (one fewer shuffle per iteration).
-        propagated = labels.join(
-            neighbor_min, labels["v"] == neighbor_min["src"], "left"
-        ).select(
-            "v",
-            F.col("component").alias("_old"),
-            F.least(
-                F.col("component"), F.coalesce("nbr_component", F.col("component"))
-            ).alias("component"),
-        )
-        # Pointer-jumping shortcut: component ← component(component). Every
-        # label IS a vertex id, so the self-lookup resolves; the left join
-        # + coalesce keeps roots (label == self) untouched.
-        parents = propagated.select(
-            F.col("v").alias("_p_v"), F.col("component").alias("_p_comp")
-        )
-        updated = (
-            propagated.join(
-                parents, propagated["component"] == parents["_p_v"], "left"
-            )
+        jumped = (
+            replab.join(m2, replab["newlabel"] == m2["r2"], "left")
             .select(
-                "v",
-                "_old",
-                F.coalesce("_p_comp", "component").alias("component"),
+                "rep",
+                F.coalesce("nl2", "newlabel").alias("newlabel"),
+                (
+                    F.col("nl2").isNotNull()
+                    & (F.col("nl2") != F.col("newlabel"))
+                ).alias("_moved"),
             )
-            .localCheckpoint()
         )
-        # The pointer-jumping step above joins the label frame with
-        # ITSELF, so the checkpoint-carried Catalyst sizeInBytes would
-        # SQUARE every iteration (bit length doubles -> BigInteger
-        # planning cost explodes; see util.strip_plan_stats /
-        # operators/concomp.py for the full root-cause).
-        updated = strip_plan_stats(updated)
-        changed = (
-            updated.filter(F.col("_old") != F.col("component")).limit(1).count()
-        )
-        labels = updated.select("v", "component")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(component diameter > 2^max_iter?); raise max_iter"
-        )
-    return labels.select(F.col("v").alias("member"), "component")
+        jumped = _ckpt(jumped)
+        replab = jumped.select("rep", "newlabel")
+        if not jumped.where("_moved").take(1):  # fixpoint: all roots
+            return replab
+    raise RuntimeError(
+        f"connected_components: relabel map did not reach fixpoint in "
+        f"{MAX_JUMPS} pointer-doubling jumps (covers chains of length "
+        f"2^{MAX_JUMPS}) — pointer cycle, which the strictly-decreasing "
+        f"min construction should make impossible"
+    )
 
 
 def _driver_union_find(rows, spark, vtype) -> DataFrame:
-    """Min-root union-find over a bounded, already-collected (src, dst)
+    """Min-root union-find over a bounded, already-collected (a, b)
     row list — duplicates, self-loops, and asymmetric orientation are
     all absorbed by the union, so raw pairs need no distinct/symmetrize
     pre-pass. Path-halving + union-by-min keeps the root of every tree
     at the component's minimum vertex id, matching the distributed
-    loop's output exactly (same (member, component) rows, component =
-    min id)."""
+    loop's output exactly (same (v, component) rows, component = min
+    id)."""
     parent: dict = {}
 
     def find(x):
@@ -167,8 +188,7 @@ def _driver_union_find(rows, spark, vtype) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:  # bounded by driver_edge_cutoff at the call site
-        s, d = r["src"], r["dst"]
+    for s, d in rows:  # bounded by driver_edge_cutoff at the call site
         parent.setdefault(s, s)
         parent.setdefault(d, d)
         rs, rd = find(s), find(d)
@@ -179,22 +199,24 @@ def _driver_union_find(rows, spark, vtype) -> DataFrame:
     out = [(v, find(v)) for v in parent]
     schema = T.StructType(
         [
-            T.StructField("member", vtype, True),
+            T.StructField("v", vtype, True),
             T.StructField("component", vtype, True),
         ]
     )
     # Arrow path (pandas input): ships the rows as one Arrow batch in a
     # couple of partitions — the list-of-tuples path pickles per-slice and
     # measured ~5s for a 2-row coalesce(1) on local[32].
-    pdf = pd.DataFrame(out, columns=["member", "component"])
+    pdf = pd.DataFrame(out, columns=["v", "component"])
     return spark.createDataFrame(pdf, schema=schema)
 
 
 def dedup_groups(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Keep one representative (the min id) per connected near-dup
-    component; singletons keep themselves."""
-    comp = connected_components(pairs)
-    joined = df.join(comp, df[id_col] == comp["member"], "left")
+    component of ``pairs(doc_a, doc_b)``; singletons keep themselves."""
+    comp = connected_components(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    )
+    joined = df.join(comp, df[id_col] == comp["v"], "left")
     return joined.select(
         df[id_col],
         F.coalesce("component", df[id_col]).alias("group_id"),

@@ -75,11 +75,12 @@ def kmeans_fit(
     id_col: str,
     vec_col: str,
     k: int,
-    max_iter: int = 8,
+    iters: int = 8,
     sample_mod: int | None = None,
 ) -> DataFrame:
     """Fit k centroids; returns DataFrame(cluster int, centroid array<double>).
-    Deterministic init: the k lowest-id vectors.
+    Deterministic init: the k lowest-id vectors, then exactly ``iters``
+    Lloyd steps (no convergence test).
 
     `sample_mod=m` trains on the deterministic ~1/m subset with
     xxhash64(id) % m == 0 — the production quantizer shape: Lloyd's cost
@@ -107,7 +108,7 @@ def kmeans_fit(
         .select("cluster", "centroid")
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(iters):
         # Fused assign: keep (_v, cluster) through the min_by aggregate
         # instead of joining assignments back onto the corpus — one
         # shuffle (the groupBy) per assign instead of two.

@@ -162,7 +162,7 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_caic_spark.operators.kmeans import kmeans_fit
 
     e = load_table(spark, sf_dir, "embeddings")
-    centroids = kmeans_fit(e, "vec_id", "embedding", k=8, max_iter=3, sample_mod=4)
+    centroids = kmeans_fit(e, "vec_id", "embedding", k=8, iters=3, sample_mod=4)
     queries = e.filter(F.col("vec_id") < 10)
     return S.ivf_topk_trained(queries, e, centroids, k=5, nprobe=2)
 

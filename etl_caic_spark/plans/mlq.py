@@ -18,6 +18,8 @@ extension family (SURVEY.md §2.C LLM/ML extensions).
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -323,10 +325,19 @@ def eval_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(38,0)")
         .alias("syy"),
     )
+    # MSE is ~10¹¹ here, where a double keeps fewer than 6 decimals, so
+    # its published digits are fixed by the twin's DOUBLE steps, taken
+    # here one by one: DECIMAL(38,0) -> DOUBLE as double(low 64 bits) +
+    # double(high bits) * 2^64 (not correctly rounded once Σe² > 2^64),
+    # then round(x, 6) as round(x * 1e6) / 1e6.
+    two64 = F.lit(Decimal(2**64))
+    lo = F.pmod(F.col("sse"), two64)
+    hi = (F.col("sse") - lo) / two64
+    sse_d = lo.cast("double") + hi.cast("double") * 2.0**64
     return m.select(
         "n",
         F.round(F.col("sae") / (100.0 * F.col("n")), 6).alias("mae"),
-        F.round(F.col("sse") / (10000.0 * F.col("n")), 6).alias("mse"),
+        (F.round(sse_d / (10000.0 * F.col("n")) * 1e6) / 1e6).alias("mse"),
         F.round(
             1.0
             - F.col("sse")

@@ -337,11 +337,12 @@ def dedup_groups_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (threshold 0.5, stop-shingle df-cap 20 — the same skew guard as
     dedup_jaccard_capped, so the pair generation is 100 TB-safe): every
     transitive cluster collapses to its min-id representative
-    (operators/components.py — iterative min-label propagation with
-    pointer-jumping and per-iteration checkpointing). Oracled via a DuckDB
-    recursive-CTE transitive closure (component = min reachable id —
-    viable at oracle scale; the iterative DataFrame form is the 100 TB
-    path); pytest additionally verifies against a Python union-find."""
+    (operators/components.py — driver union-find below 1M edges, star
+    contraction with pointer doubling and per-round checkpointing
+    above). Oracled via a DuckDB recursive-CTE transitive closure
+    (component = min reachable id — viable at oracle scale; the
+    iterative DataFrame form is the 100 TB path); pytest additionally
+    verifies against a Python union-find."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", ["lang", "source"], k=3, threshold=0.5,

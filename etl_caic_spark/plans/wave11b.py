@@ -16,11 +16,11 @@ the planted-twin corpus (plans/llm3.twinned_embedding_corpus — the
 shared semantic-dup fixture), sign-random-projection LSH candidate
 pairs verified by exact cosine >= 0.9 (operators/lsh.py — bucketed
 equi-join, never all-pairs, integer-deterministic hyperplanes), and the
-shared star-contraction operator (operators/concomp.py) for transitive
-clusters with canonical-minimum survivors. The oracle replays the full
-LSH banding, the cosine verification AND a recursive transitive
-closure, so the hash match certifies true semantic-cluster semantics
-from raw floats to keep verdicts.
+shared connected-components operator (operators/components.py) for
+transitive clusters with canonical-minimum survivors. The oracle
+replays the full LSH banding, the cosine verification AND a recursive
+transitive closure, so the hash match certifies true semantic-cluster
+semantics from raw floats to keep verdicts.
 
 Scale: identical posture to its components — banding is linear with
 bucket-size caps, verification touches candidate pairs only, and the
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import lsh as L
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.components import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -138,7 +138,7 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = L.lsh_cosine_pairs(
         corpus, "vec_id", "embedding", threshold=0.9, planes=64, band_bits=16, dims=64
     ).select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    comp = connected_components_gated(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("v").alias("vec_id"), F.col("component").alias("canonical_vec")
     )
     sizes = comp.groupBy("canonical_vec").agg(

@@ -27,9 +27,10 @@ contracted edge set is empty and the doubling loop when no pointer
 moved (one single-row take(1) each — the same bounded-collect class as
 ml_logreg_gd's gradient step and AQE's own statistics). Both 64-step
 caps are backed by geometric decay and raise RuntimeError rather than
-ever returning partial labels (operators/concomp.py; the long-path
+ever returning partial labels (operators/components.py; the long-path
 regime is pinned by a 220-node chain vs union-find in
-tests/test_prefix_property.py).
+tests/test_prefix_property.py and a 5,000-node chain in
+tests/test_components.py).
 
 The graph is the deterministic event graph (operators/eventgraph.py)
 additionally sparsified by a residue rule (endpoints must agree mod 7)
@@ -49,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.components import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -80,8 +81,9 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     component (module docstring: star contraction, convergence-detected,
     certified against a recursive-transitive-closure oracle).
 
-    Plan per round (operators/concomp.py — the shared star-contraction
-    operator, also driving dedup_cluster_canonical): two hash joins
+    Plan per round (operators/components.py — the shared
+    connected-components operator, also driving
+    dedup_cluster_canonical): two hash joins
     relabel the contracted edge endpoints, one symmetrized groupBy
     computes each representative's neighborhood minimum, and one join
     folds the new representative labels back onto the node frame;
@@ -89,11 +91,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative-plan discipline shared with graph_hits, wave8c.py). All
     shuffles are keyed by node/label id.
 
-    r16: size-gated like every other componentization consumer
-    (concomp.connected_components_gated — one bounded probe, driver
-    union-find below 1M raw edges, the distributed loop above; labels
-    identical by construction, pinned by
-    tests/test_prefix_property.py). The residue-sparsified fixture
+    r16: size-gated like every other componentization consumer (one
+    bounded probe, driver union-find below 1M raw edges, the
+    distributed loop above; labels identical by construction, pinned
+    by tests/test_prefix_property.py). The residue-sparsified fixture
     graph saturates at ~150 nodes at every SF, so at bench scale the
     star-contraction rounds were a dozen serial blocking jobs of pure
     fixed cost; at 100 TB edge counts exceed the gate and the
@@ -109,6 +110,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    return connected_components_gated(edges).select(
+    return connected_components(edges).select(
         F.col("v").alias("user_id"), "component"
     )

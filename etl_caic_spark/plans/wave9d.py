@@ -6,11 +6,11 @@ parametric one-way ANOVA, and Matthews correlation.
   CLUSTERS — transitively-connected duplicate groups — keeping one
   canonical document per cluster (the Dolma / ccnet recipe: pairs ->
   union-find -> keep min). This query closes that gap: the pair graph
-  feeds the shared star-contraction operator (operators/concomp.py) and
-  each participating document is labeled with its cluster's canonical
-  (minimum) doc_id, its cluster size, and whether it survives. The
-  oracle replays the full md5-MinHash banding AND a recursive
-  transitive closure, so the hash match certifies true
+  feeds the shared connected-components operator
+  (operators/components.py) and each participating document is labeled
+  with its cluster's canonical (minimum) doc_id, its cluster size, and
+  whether it survives. The oracle replays the full md5-MinHash banding
+  AND a recursive transitive closure, so the hash match certifies true
   transitive-duplicate semantics end-to-end.
 - ``stat_anova_f``: the parametric sibling of stat_kruskal_wallis
   (wave9a.py) on the same design — one-way ANOVA F and eta^2 for
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_caic_spark.operators import dedup as D
-from etl_caic_spark.operators.concomp import connected_components_gated
+from etl_caic_spark.operators.components import connected_components
 from etl_caic_spark.registry import register
 from etl_caic_spark.sources import load_table
 
@@ -130,7 +130,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the pair generation is the banded LSH equi-join (never
     all-pairs; operators/dedup.py), and the clustering is the shared
-    star-contraction + pointer-doubling operator (operators/concomp.py
+    star-contraction + pointer-doubling operator (operators/components.py
     — contracted edge frame strictly shrinks per round, the relabel map
     is shortcut to its fixpoint each round, convergence detected by a
     one-row count and a RuntimeError — never silent partial labels — if
@@ -144,7 +144,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_lsh_pairs_md5(
         d, "doc_id", "text", num_hashes=16, bands=8, k=3, threshold=0.5
     ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    comp = connected_components_gated(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("v").alias("doc_id"), F.col("component").alias("canonical_doc")
     )
     sizes = comp.groupBy("canonical_doc").agg(

@@ -23,7 +23,7 @@ shortcuts) must wrap every localCheckpoint in util.strip_plan_stats —
 checkpoints carry the origin plan's Catalyst sizeInBytes, and a
 self-join SQUARES that statistic per iteration until BigInteger
 arithmetic dominates planning (root cause + measurements in SCALE.md
-round 10 and operators/concomp.py). Joins against fixed real-stat
+round 10 and operators/components.py). Joins against fixed real-stat
 frames (pagerank, kmeans, logreg) grow the stat linearly and do not
 need the strip.
 """

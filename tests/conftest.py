@@ -4,7 +4,6 @@ the differential-compare helper used by the oracle tests."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -12,13 +11,14 @@ import pytest
 
 from etl_caic_spark.session import get_spark
 from etl_caic_spark.sources import TABLE_NAMES
+from tools.driver_sim import canon
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="etl-caic-spark-tests", cpus=8)
+    s = get_spark(app_name="etl-caic-spark-tests")
     yield s
     s.stop()
 
@@ -39,28 +39,11 @@ def duck():
     con.close()
 
 
-def canon_value(v):
-    """Canonicalize a cell for order-insensitive comparison."""
-    if v is None:
-        return "∅"
-    if isinstance(v, bool):
-        return f"b:{v}"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "f:nan"
-        # repr of the exact double — queries are written so both engines
-        # produce bit-identical doubles (per-row ops) or pre-rounded values.
-        return f"f:{v!r}"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon_value(x) for x in v) + "]"
-    return f"{type(v).__name__[0]}:{v}"
-
-
 def canon_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
     """Sort columns by name, canonicalize cells, sort rows — the same
     order-insensitive shape the driver hashes."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(canon_value(r[i]) for i in order) for r in rows]
+    out = [tuple(canon(r[i]) for i in order) for r in rows]
     out.sort()
     return out
 

@@ -31,7 +31,8 @@ def test_components_match_union_find(spark, sf_dir):
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", ["lang", "source"], k=3, threshold=0.5
     )
-    edge_list = [(r["doc_a"], r["doc_b"]) for r in pairs.collect()]
+    edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    edge_list = [(r["a"], r["b"]) for r in edges.collect()]
     assert edge_list, "no near-dup pairs — corpus changed?"
 
     uf = UnionFind()
@@ -40,19 +41,35 @@ def test_components_match_union_find(spark, sf_dir):
     expected = {v: uf.find(v) for v in uf.parent}
 
     # default path (size-gated: small edge sets run driver union-find)
-    got = {
-        r["member"]: r["component"] for r in connected_components(pairs).collect()
-    }
+    got = {r["v"]: r["component"] for r in connected_components(edges).collect()}
     # canonical min-representative: union-find path roots ARE the min ids
     # because union() always parents the larger root under the smaller.
     assert got == expected
 
     # distributed path forced (cutoff=0): must produce identical labels
     got_dist = {
-        r["member"]: r["component"]
-        for r in connected_components(pairs, driver_edge_cutoff=0).collect()
+        r["v"]: r["component"]
+        for r in connected_components(edges, driver_edge_cutoff=0).collect()
     }
     assert got_dist == expected
+
+
+def test_connected_components_long_path_above_gate(spark):
+    """A 5,000-node path with shuffled ids on the distributed path: the
+    regime every consumer reaches above the driver gate. Labels creep
+    one hop per min step on a non-monotone chain, so a loop without the
+    pointer-doubling shortcut (or with a small round cap) raises or
+    returns partial labels here."""
+    n = 5000
+    ids = [(i * 97) % n for i in range(n)]
+    edges = spark.createDataFrame(
+        [(min(a, b), max(a, b)) for a, b in zip(ids, ids[1:])], "a bigint, b bigint"
+    )
+    got = {
+        r["v"]: r["component"]
+        for r in connected_components(edges, driver_edge_cutoff=0).collect()
+    }
+    assert got == {v: 0 for v in range(n)}
 
 
 def test_dedup_groups_representatives(spark, sf_dir):

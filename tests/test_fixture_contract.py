@@ -257,3 +257,17 @@ def test_embeddings_vec_id_unique():
     t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"), columns=["vec_id"])
     ids = t.column("vec_id").to_pylist()
     assert len(ids) == len(set(ids))
+
+
+def test_embeddings_vectors_are_full_64_dim():
+    """pq_shortlist_frames takes its anchor ids from the d = 0 slice of
+    the posexploded embeddings, which has one row per vector only while
+    every row carries a non-null vector (posexplode drops NULL and empty
+    arrays); the 8 subspaces of 8 dims need all 64."""
+    import pyarrow.compute as pc
+
+    col = pq.read_table(
+        os.path.join(SF_DIR, "embeddings.parquet"), columns=["embedding"]
+    ).column("embedding")
+    assert col.null_count == 0
+    assert pc.all(pc.equal(pc.list_value_length(col), 64)).as_py()

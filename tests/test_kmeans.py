@@ -16,7 +16,7 @@ def test_inertia_non_increasing(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     prev = None
     for iters in (0, 2, 5):
-        c = kmeans_fit(e, "vec_id", "embedding", k=8, max_iter=iters)
+        c = kmeans_fit(e, "vec_id", "embedding", k=8, iters=iters)
         cur = inertia(e, c, "vec_id", "embedding")
         if prev is not None:
             assert cur <= prev * (1 + 1e-9), f"inertia rose at iter {iters}"
@@ -25,7 +25,7 @@ def test_inertia_non_increasing(spark, sf_dir):
 
 def test_assignment_matches_numpy(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    centroids = kmeans_fit(e, "vec_id", "embedding", k=5, max_iter=3)
+    centroids = kmeans_fit(e, "vec_id", "embedding", k=5, iters=3)
     got = {
         r["vec_id"]: r["cluster"]
         for r in assign_clusters(e, centroids, "vec_id", "embedding").collect()
@@ -40,7 +40,7 @@ def test_assignment_matches_numpy(spark, sf_dir):
 
 def test_kmeans_centroids_shape(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    c = kmeans_fit(e, "vec_id", "embedding", k=8, max_iter=2)
+    c = kmeans_fit(e, "vec_id", "embedding", k=8, iters=2)
     rows = c.collect()
     assert len(rows) == 8
     assert all(len(r["centroid"]) == 64 for r in rows)

@@ -1,5 +1,5 @@
 """Hypothesis property tests for operators/prefix.py and
-operators/concomp.py — the two round-9 workhorse operators — against
+operators/components.py — the two round-9 workhorse operators — against
 brute-force Python references on arbitrary generated inputs (ties,
 negatives, singleton partitions, disconnected graphs, self-contained
 cliques). The oracle differentials certify them on the fixture
@@ -11,7 +11,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_caic_spark.operators.concomp import connected_components
+from etl_caic_spark.operators.components import connected_components
 from etl_caic_spark.operators.prefix import with_global_order
 
 _SETTINGS = dict(
@@ -80,7 +80,8 @@ def test_connected_components_matches_union_find(spark, edges):
         return
     df = spark.createDataFrame(sorted(set(edges)), "a bigint, b bigint")
     got = {
-        r["v"]: r["component"] for r in connected_components(df).collect()
+        r["v"]: r["component"]
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
     }
 
     parent: dict[int, int] = {}
@@ -114,7 +115,10 @@ def test_connected_components_long_path(spark):
     ids = [(i * 97) % n for i in range(n)]
     edges = [(min(a, b), max(a, b)) for a, b in zip(ids, ids[1:])]
     df = spark.createDataFrame(sorted(set(edges)), "a bigint, b bigint")
-    got = {r["v"]: r["component"] for r in connected_components(df).collect()}
+    got = {
+        r["v"]: r["component"]
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
+    }
     assert got == {v: 0 for v in range(n)}
 
 
@@ -124,7 +128,10 @@ def test_connected_components_two_long_chains(spark):
     c1 = [(i, i + 1) for i in range(0, 79)]
     c2 = [(i, i + 1) for i in range(100, 179)]
     df = spark.createDataFrame(c1 + c2, "a bigint, b bigint")
-    got = {r["v"]: r["component"] for r in connected_components(df).collect()}
+    got = {
+        r["v"]: r["component"]
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
+    }
     want = {v: 0 for v in range(80)}
     want.update({v: 100 for v in range(100, 180)})
     assert got == want
@@ -209,23 +216,20 @@ def test_strip_plan_stats_fallback_warns_once(spark):
         U._STRIP_STATS_UNAVAILABLE = old_flag
 
 
-def test_connected_components_gated_matches_distributed(spark):
-    """r16: the size-gated hybrid's driver path must return exactly the
+def test_connected_components_gate_matches_distributed(spark):
+    """r16: the size gate's driver path must return exactly the
     distributed star-contraction's labels (same rows, same types) — and
     cutoff=0 must force the distributed path."""
-    from etl_caic_spark.operators.concomp import connected_components_gated
-
     edges = [(2, 1), (3, 2), (5, 9), (9, 5), (7, 7), (10, 11)]
     df = spark.createDataFrame(edges, "a long, b long")
     via_driver = {
-        (r["v"], r["component"])
-        for r in connected_components_gated(df).collect()
+        (r["v"], r["component"]) for r in connected_components(df).collect()
     }
     via_dist = {
         (r["v"], r["component"])
-        for r in connected_components_gated(df, driver_edge_cutoff=0).collect()
+        for r in connected_components(df, driver_edge_cutoff=0).collect()
     }
     assert via_driver == via_dist
-    assert connected_components_gated(df).schema == connected_components_gated(
+    assert connected_components(df).schema == connected_components(
         df, driver_edge_cutoff=0
     ).schema

@@ -1,10 +1,12 @@
 """Edge-case differentials for the round-8 review fixes, driven through
 BOTH engines on synthetic fixtures: the driver fixtures are NULL-free
 and always share n-grams, so the ln(0) and NULL-canonicalization guards
-are unreachable there. These tests build tiny documents.parquet
-fixtures and compare the Spark query against its registered DuckDB
-oracle directly — the same differential the driver runs, on the inputs
-that used to diverge."""
+are unreachable there (as are a chrF gram order only hypotheses reach
+and an MSE whose last digit the twin's DOUBLE steps decide at sf0.01).
+These tests build tiny documents.parquet / orders.parquet fixtures and
+compare the Spark query against its registered DuckDB oracle directly —
+the same differential the driver runs, on the inputs that used to
+diverge."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ import duckdb
 import pytest
 
 from etl_caic_spark.registry import all_specs
+from tests.conftest import compare_with_oracle
 
 SPECS = all_specs()
 
@@ -28,15 +31,20 @@ def _write_docs(spark, tmp_path, rows):
     return str(tmp_path)
 
 
+def _twin_con(sf_dir, table):
+    """DuckDB connection with ``table`` viewed over the DIRECTORY of part
+    files Spark writes for ``{table}.parquet``."""
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW {table} AS SELECT * FROM '{sf_dir}/{table}.parquet/*.parquet'"
+    )
+    return con
+
+
 def _oracle(sf_dir, sql):
     """Run the oracle and return eagerly-fetched (cols, rows) — a lazy
     relation would outlive its connection."""
-    con = duckdb.connect()
-    # Spark writes documents.parquet as a DIRECTORY of part files
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{sf_dir}/documents.parquet/*.parquet'"
-    )
+    con = _twin_con(sf_dir, "documents")
     rel = con.sql(sql)
     cols = [d[0] for d in rel.description]
     rows = rel.fetchall()
@@ -105,3 +113,54 @@ def test_fingerprint_null_not_collided_with_shifted_fields(spark, tmp_path):
     fa = spec.fn(spark, sf_a).filter("source = '__all__'").collect()[0]["fp_xor"]
     fb = spec.fn(spark, sf_b).filter("source = '__all__'").collect()[0]["fp_xor"]
     assert fa != fb
+
+
+def test_chrf_hypothesis_only_gram_order_matches_twin(spark, tmp_path):
+    # every reference (even doc_id) is shorter than 3 characters, so the
+    # 3-gram order exists only on the hypothesis side: match3/hyp3 keep
+    # their counts and ref3 / chrf2_3_micro are NULL on BOTH engines
+    sf = _write_docs(
+        spark,
+        tmp_path,
+        [
+            (0, "ab", "en", "s", 2),
+            (1, "abcd", "en", "s", 4),
+            (2, "x", "en", "s", 1),
+            (3, "xyz", "en", "s", 3),
+        ],
+    )
+    spec = SPECS["eval_chrf_corpus"]
+    con = _twin_con(sf, "documents")
+    try:
+        compare_with_oracle(spark, con, spec, sf)
+    finally:
+        con.close()
+    row = spec.fn(spark, sf).collect()[0]
+    assert row["hyp3"] == 3 and row["match3"] == 0
+    assert row["ref3"] is None and row["chrf2_3_micro"] is None
+
+
+@pytest.mark.parametrize(
+    "prices",
+    [
+        # Σe² between 2^53 and 2^64: the twin's round(x, 6) step decides
+        # the last digit of mse
+        [
+            368097.34, 579528.04, 768384.87, 701555.48, 571772.39, 385312.21,
+            796550.89, 250734.89, 696300.64, 472872.81, 384779.58, 739003.67,
+        ],
+        # Σe² past 2^64: the twin's DECIMAL(38,0) -> DOUBLE step decides it
+        [29488954.93, 29714286.58, 22916123.99],
+    ],
+)
+def test_regression_metrics_large_sse_matches_twin(spark, tmp_path, prices):
+    orders = spark.createDataFrame(
+        list(enumerate(prices)), "o_orderkey bigint, o_totalprice double"
+    )
+    orders.coalesce(1).write.parquet(os.path.join(str(tmp_path), "orders.parquet"))
+    sf = str(tmp_path)
+    con = _twin_con(sf, "orders")
+    try:
+        compare_with_oracle(spark, con, SPECS["eval_regression_metrics"], sf)
+    finally:
+        con.close()

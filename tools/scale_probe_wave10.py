@@ -31,7 +31,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from etl_caic_spark.operators.concomp import connected_components  # noqa: E402
+from etl_caic_spark.operators.components import connected_components  # noqa: E402
 from etl_caic_spark.operators.prefix import with_global_order  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
 from tools.scale_probe import SF_DIR, replicate, timeit  # noqa: E402
@@ -64,7 +64,7 @@ def main() -> None:
             edges = ids.select(
                 F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
             )
-            comp = connected_components(edges)
+            comp = connected_components(edges, driver_edge_cutoff=0)
             bad = comp.where(F.col("component") != 0).count()
             assert bad == 0, f"chain CC wrong labels: {bad} of {n}"
 
@@ -89,7 +89,7 @@ def main() -> None:
                 .filter(F.col("a") != F.col("b"))
                 .distinct()
             )
-            noop(connected_components(edges))
+            noop(connected_components(edges, driver_edge_cutoff=0))
 
         li = replicate(spark, "lineitem", factor, "l_orderkey", 100_000_000)
 

@@ -106,11 +106,11 @@ def main() -> None:
             edges = (
                 pairs.join(core.select(F.col("v").alias("id_a")), "id_a")
                 .join(core.select(F.col("v").alias("id_b")), "id_b")
-                .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+                .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
             )
-            return core.join(
-                connected_components(edges), core.v == F.col("member"), "left"
-            ).select("v", F.coalesce("component", F.col("v")).alias("c"))
+            return core.join(connected_components(edges), "v", "left").select(
+                "v", F.coalesce("component", F.col("v")).alias("c")
+            )
 
         def qnorm():
             s = ev.filter(F.col("event_id") % 4 == 0).select(

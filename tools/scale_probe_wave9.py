@@ -30,7 +30,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from etl_caic_spark.operators.concomp import connected_components  # noqa: E402
+from etl_caic_spark.operators.components import connected_components  # noqa: E402
 from etl_caic_spark.session import get_spark  # noqa: E402
 from etl_caic_spark.sources import load_table  # noqa: E402
 from tools.scale_probe import SF_DIR, replicate, timeit  # noqa: E402
@@ -126,7 +126,7 @@ def main() -> None:
                 .filter(F.col("a") != F.col("b"))
                 .distinct()
             )
-            noop(connected_components(edges))
+            noop(connected_components(edges, driver_edge_cutoff=0))
 
         # -- PQ core: quantize, assign to 16 broadcast anchors, Lloyd
         # step, re-assign (the corpus-scale stages of sim_pq_adc)
@@ -205,7 +205,7 @@ def main() -> None:
         row = {
             "factor": factor,
             "kendall_grid_s": timeit(kendall),
-            "concomp_s": timeit(cc),
+            "cc_s": timeit(cc),
             "pq_codebook_s": timeit(pq),
             "boost_round_s": timeit(boost),
         }
